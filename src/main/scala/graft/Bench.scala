@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): one JSON line with per-query
   * seconds over SPARK_GRAFT_SF_DIR.
@@ -37,29 +36,19 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.muteSanctionedWindowWarns() // bounded-frame windows: see SCALE.md "Sanctioned global windows"
+    // dev-only subsetting for perf iteration (unset in full runs):
+    // comma-separated gate names, resolved before the session starts so
+    // a typo fails instead of printing an empty line; sentinels, stage
+    // builds, and the layout experiments are all skipped when it is set
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(SparkEntry.lookup(_: String))
+    val cpus = GraftSession.defaultCores
+    val spark = GraftSession.local(cpus)
 
     // warm-up: exercises scan + shuffle + codegen paths once, un-timed
     SparkEntry.entry(spark).count()
 
-    // dev-only subsetting for perf iteration (unset in driver runs):
-    // comma-separated query names; sentinels, stage builds, and the
-    // layout experiments are all skipped when the filter is set
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-
     // Extended warm-up (r12 optimization round, guide §1.4 spirit):
-    // run the four shared stage-build plan shapes at sf0.001, un-timed.
+    // run the shared stage-build plan shapes at sf0.001, un-timed.
     // Rationale, measured (OPTIMIZATION_r12.md "stage builds"): the
     // one-shot stage builds were the ONLY cold-measured entries in the
     // artifact — every query entry is a min-of-2, so its codegen/JIT
@@ -80,13 +69,8 @@ object Bench {
       if (warm.isDirectory &&
           warm.getCanonicalPath != sfFile.getCanonicalPath) {
         val d = warm.toString
-        try {
-          graft.functions.DedupStage.prebuild(spark, d)
-          operators.GoldStage.fact(spark, d).count()
-          operators.BasketStage.prebuild(spark, d)
-          graft.functions.QualityModel.prebuild(spark, d)
-          graft.functions.Fuzzy.supplierPairs(spark, d).count()
-        } catch { case scala.util.control.NonFatal(e) =>
+        try SparkEntry.stageBuilds.foreach { case (_, build) => build(spark, d) }
+        catch { case scala.util.control.NonFatal(e) =>
           println(s"[warmup] sf0.001 prebuild skipped: ${e.getMessage}")
         }
       }
@@ -123,9 +107,8 @@ object Bench {
     // tenant, cgroup quota) — exactly the contention that stretches
     // 32-thread query stages but leaves one-core probes untouched.
     def spinSentinelMt(): Double = {
-      val n = cpus.toInt
       val t0 = System.nanoTime()
-      val threads = (1 to n).map { _ =>
+      val threads = (1 to cpus).map { _ =>
         new Thread(() => { if (spin(400L * 1000 * 1000) == 42L) println("") })
       }
       threads.foreach(_.start()); threads.foreach(_.join())
@@ -162,21 +145,11 @@ object Bench {
       results("bench_sentinel_membw_start") = Sentinel.membwSeconds()
 
       // shared DAG stages, each timed once, explicitly (single run: the
-      // artifact persists, so a second run would measure nothing)
-      results("bench_dedup_stage_build") =
-        time(graft.functions.DedupStage.prebuild(spark, sfDir))
-      results("bench_fact_stage_build") =
-        time { operators.GoldStage.fact(spark, sfDir).count(); () }
-      results("bench_basket_stage_build") =
-        time(operators.BasketStage.prebuild(spark, sfDir))
-      results("bench_model_stage_build") =
-        time(graft.functions.QualityModel.prebuild(spark, sfDir))
-      // r12: the supplier fuzzy-pair table became a staged artifact
-      // (shared by q_fuzzy_match + q_entity_resolution) — its build is
-      // timed here, explicitly, like every other shared stage, so the
-      // sharing cannot hide the mining cost from the total
-      results("bench_fuzzy_stage_build") =
-        time { graft.functions.Fuzzy.supplierPairs(spark, sfDir).count(); () }
+      // artifact persists, so a second run would measure nothing) — the
+      // sharing must not hide a stage's cost from the total
+      SparkEntry.stageBuilds.foreach { case (stage, build) =>
+        results(s"bench_${stage}_stage_build") = time(build(spark, sfDir))
+      }
       // disk probe RIGHT AFTER the write-heavy stage-build window: the
       // start/end samples straddle ~6 min and a transient IO dip in
       // between (observed: stage builds 3× slower with clean start/end
@@ -223,15 +196,13 @@ object Bench {
     }
     if (only.isEmpty) memTelemetry("q000")
     var qIdx = 0
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    only.getOrElse(SparkEntry.gates).foreach { gate =>
       try {
-        results(name) = minOf(2) { fn(spark, sfDir).count() }
+        results(gate.name) = minOf(2) { gate.run(spark, sfDir).count() }
       } catch {
         case e: Throwable =>
-          results(name) = -1.0
-          errors(name) = sanitize(e)
+          results(gate.name) = -1.0
+          errors(gate.name) = sanitize(e)
       }
       qIdx += 1
       if (only.isEmpty && qIdx % 50 == 0) memTelemetry(f"q$qIdx%03d")

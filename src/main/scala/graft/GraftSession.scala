@@ -2,19 +2,24 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Entry point for library users: a SparkSession tuned the way every
-  * graft module expects, with the custom SQL functions registered.
+/** Entry point for library users and every graft main: a SparkSession
+  * tuned the way every graft module expects, with the custom SQL
+  * functions registered.
   *
-  * Local mode defaults mirror Verify/Bench (shuffle partitions = cores,
-  * AQE on, small maxPartitionBytes for single-file test inputs, UTC).
+  * Local mode: shuffle partitions = cores, AQE on, small
+  * maxPartitionBytes for single-file test inputs, UTC, WARN logging
+  * with the sanctioned-window WARN muted.
   * On a real cluster, build your own session — then only
   * [[configure]] matters: it registers the SQL functions and applies
   * the settings that are scale-independent (UTC, AQE).
   */
 object GraftSession {
 
-  def local(cores: Int = Runtime.getRuntime.availableProcessors(),
-      appName: String = "graft"): SparkSession = {
+  /** `SPARK_GRAFT_CPUS` if set, else every core the JVM sees. */
+  def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  def local(cores: Int = defaultCores, appName: String = "graft"): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
@@ -25,6 +30,8 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     configure(spark)
+    spark.sparkContext.setLogLevel("WARN")
+    muteSanctionedWindowWarns() // bounded-frame windows: see SCALE.md "Sanctioned global windows"
     spark
   }
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool (not part of the driver contract): run named registered
   * queries once (noop-sink semantics via count over the final frame is
@@ -7,24 +6,21 @@ import org.apache.spark.sql.SparkSession
   * plan) and print per-operator metrics — the empirical attribution
   * step of the optimization guide (§1: measure first, §7.2: read the
   * plan). Usage:
-  *   tools/run_graft.sh graft.Probe <sfDir> <q1> [q2 ...]
+  *   tools/run_graft.sh graft.Probe <sfDir> <q1|prebuild:stage> ...
   * Prints, per query: wall seconds (2 runs), then every plan node with
-  * its non-zero metrics (rows, time, spill, broadcast size).
+  * its non-zero metrics (rows, time, spill, broadcast size). A
+  * `prebuild:<stage>` argument times one of [[SparkEntry.stageBuilds]]
+  * exactly as Bench does (single run — the artifact persists).
   */
 object Probe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftSession.muteSanctionedWindowWarns()
+    // every name resolves before the session starts: a typo fails
+    // loudly instead of after the earlier probes ran
+    val stages = SparkEntry.stageBuilds.map { case (n, b) => s"prebuild:$n" -> b }.toMap
+    val gates = SparkEntry.lookup(args.tail.filterNot(stages.contains).toSeq)
+      .map(g => g.name -> g.run).toMap
+    val spark = GraftSession.local()
     SparkEntry.entry(spark).count() // warm-up, untimed
 
     def walk(p: org.apache.spark.sql.execution.SparkPlan, depth: Int): Unit = {
@@ -49,32 +45,26 @@ object Probe {
       }
     }
 
-    // stage-build pseudo-queries: time the shared prebuilds exactly as
-    // Bench does (single run — the artifact persists afterwards)
-    val stages = Map[String, () => Unit](
-      "prebuild:dedup" -> (() => graft.functions.DedupStage.prebuild(spark, sfDir)),
-      "prebuild:fact" -> (() => { operators.GoldStage.fact(spark, sfDir).count(); () }),
-      "prebuild:basket" -> (() => operators.BasketStage.prebuild(spark, sfDir)),
-      "prebuild:model" -> (() => graft.functions.QualityModel.prebuild(spark, sfDir)))
     args.tail.foreach { q =>
       println(s"===== $q =====")
-      if (stages.contains(q)) {
-        val t0 = System.nanoTime()
-        stages(q)()
-        println(f"  wall: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      } else {
-      val t0 = System.nanoTime()
-      val df = SparkEntry.queries(q)(spark, sfDir)
-      df.count()
-      val t1 = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      val t0b = System.nanoTime()
-      val df2 = SparkEntry.queries(q)(spark, sfDir)
-      df2.collect() // collect, not count: executes df2's OWN
-      // QueryExecution so the walk below reads real metrics
-      val t2 = (System.nanoTime() - t0b) / 1e9
-      println(f"  wall: run1=$t1%.2f s run2=$t2%.2f s")
-      walk(df2.queryExecution.executedPlan, 0)
+      stages.get(q) match {
+        case Some(build) =>
+          val t0 = System.nanoTime()
+          build(spark, sfDir)
+          println(f"  wall: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+        case None =>
+          val run = gates(q)
+          val t0 = System.nanoTime()
+          run(spark, sfDir).count()
+          val t1 = (System.nanoTime() - t0) / 1e9
+          spark.catalog.clearCache()
+          val t0b = System.nanoTime()
+          val df2 = run(spark, sfDir)
+          df2.collect() // collect, not count: executes df2's OWN
+          // QueryExecution so the walk below reads real metrics
+          val t2 = (System.nanoTime() - t0b) / 1e9
+          println(f"  wall: run1=$t1%.2f s run2=$t2%.2f s")
+          walk(df2.queryExecution.executedPlan, 0)
       }
     }
     spark.stop()

@@ -96,7 +96,6 @@ object ScaleSoak {
 
   def main(args: Array[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // subset filter for incremental soaks (same contract as Bench's
     // SPARK_GRAFT_BENCH_ONLY): replication dirs are reused, so soaking
     // only the queries added since the last full run is cheap
@@ -110,16 +109,7 @@ object ScaleSoak {
     }
     val mults = args.headOption.getOrElse("1,4,16")
       .split(",").map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.muteSanctionedWindowWarns() // bounded-frame windows: see SCALE.md "Sanctioned global windows"
+    val spark = GraftSession.local()
 
     // un-timed warm-up circuit at the smallest multiplier: the first
     // execution of each query shape absorbs session/codegen/JIT
@@ -410,8 +400,8 @@ object ScaleSoak {
             lit("[a-z0-9]+"), lit(0))).as("tok"))
         val whole = graft.functions.Hll.registersOf(toks)
         val merged = graft.functions.Hll.registersOf(
-          toks.withColumn("source", concat_ws(" ", col("shard"), col("source"))))
-          .withColumn("source", substring_index(col("source"), " ", -1))
+          toks.withColumn("source", concat_ws("\u0000", col("shard"), col("source"))))
+          .withColumn("source", substring_index(col("source"), "\u0000", -1))
           .groupBy(col("source"), col("reg")).agg(max(col("r")).as("r"))
         val diff = whole.exceptAll(merged).count() + merged.exceptAll(whole).count()
         println(s"""{"soak":"hll_merge","m":$m,"regs":${merged.count()},"mismatch":$diff}""")
@@ -423,8 +413,8 @@ object ScaleSoak {
             col("source"), col("n_chars").as("x"))
         val whole = graft.functions.DdSketch.sketchOf(vals)
         val merged = graft.functions.DdSketch.sketchOf(
-          vals.withColumn("source", concat_ws(" ", col("shard"), col("source"))))
-          .withColumn("source", substring_index(col("source"), " ", -1))
+          vals.withColumn("source", concat_ws("\u0000", col("shard"), col("source"))))
+          .withColumn("source", substring_index(col("source"), "\u0000", -1))
           .groupBy(col("source"), col("bin")).agg(sum(col("cnt")).as("cnt"))
         val diff = whole.exceptAll(merged).count() + merged.exceptAll(whole).count()
         println(s"""{"soak":"ddsketch_merge","m":$m,"bins":${merged.count()},"mismatch":$diff}""")

@@ -1,32 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each gate's result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (tools/check_oracle.py). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg: comma-separated query-name filter (local dev;
-    // the driver always invokes with exactly two args = run everything)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    // a typo'd filter name would otherwise dump nothing, exit 0, and
-    // leave a stale previous result to read as a false green
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.muteSanctionedWindowWarns() // bounded-frame windows: see SCALE.md "Sanctioned global windows"
+    // optional 3rd arg: comma-separated gate-name filter (local dev;
+    // without it, every gate runs), resolved before the session starts:
+    // a typo'd name would otherwise dump nothing, exit 0, and leave a
+    // stale previous result to read as a false green
+    val selected =
+      if (args.length > 2) SparkEntry.lookup(args(2)) else SparkEntry.gates
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // environment-health record for THIS artifact (VERDICT r4 item 6:
     // the verify pass is environment-sensitive too — streaming drains
@@ -35,11 +20,10 @@ object Verify {
     val spinStart = Sentinel.spinSeconds()
     val diskStart = Sentinel.diskSeconds()
     val membwStart = Sentinel.membwSeconds()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    selected.foreach { gate =>
+      val name = gate.name
       try {
-        val df = fn(spark, sfDir)
+        val df = gate.run(spark, sfDir)
         // in-band global-window tripwire (the muted-WARN backstop):
         // an unsanctioned partitionless window fails the query HERE,
         // which deletes its dump and reads red downstream

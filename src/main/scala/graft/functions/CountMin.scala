@@ -127,7 +127,7 @@ object CountMin {
     *    source's vocabulary;
     *  - heap (above the limit — the 100 TB Zipf-vocabulary case this
     *    op exists for): a bounded-buffer top-(k+1) AGGREGATE
-    *    (q_topk_heap's machinery) whose partials are k+1 entries per
+    *    ([[TopCntAgg]]) whose partials are k+1 entries per
     *    source regardless of vocabulary; correctness is the selection
     *    monoid — top-(k+1) of a union of distinct (source, tok) rows
     *    equals top-(k+1) of per-partial top-(k+1)s, and every survivor
@@ -176,10 +176,9 @@ object CountMin {
         ($"lambda" * (k + 1) <= $"n_tokens").as("within_bound"))
   }
 
-  /** Bounded top-`cap` buffer of (cnt, tok) ordered cnt desc, tok asc —
-    * the [[graft.operators.Behavioral]] TopKByValue shape over the
-    * already-distinct (source, tok) vocab rows. Partial state is ≤ cap
-    * entries however large the vocabulary. */
+  /** Bounded top-`cap` buffer of (cnt, tok) ordered cnt desc, tok asc
+    * over the already-distinct (source, tok) vocab rows. Partial state
+    * is ≤ cap entries however large the vocabulary. */
   private class TopCntAgg(cap: Int)
       extends org.apache.spark.sql.expressions.Aggregator[
         (String, String, Long), Seq[(Long, String)], Seq[(Long, String)]] {

@@ -106,7 +106,10 @@ object DomainReweight {
 
   /** The whole trajectory replayed in SQL: per-source loss from the
     * bigram-LM CTEs, then [[Rounds]] unrolled weight rounds in exact
-    * integer arithmetic (HUGEINT for the normalization product). */
+    * integer arithmetic (HUGEINT for the normalization product). `src`
+    * is MATERIALIZED: every unrolled round reaches it, and DuckDB would
+    * otherwise re-inline the whole bigram chain at each reference (it
+    * ran out of memory at 12.5 GiB on a 65 KB table, 15 GB 4-core box). */
   val domainReweightSql: String = {
     def round(prev: String, cur: String): String =
       s"""ref_$cur AS (
@@ -148,7 +151,7 @@ object DomainReweight {
        |  SELECT doc_id, COUNT(*) AS n_bigrams,
        |         CAST(-SUM(term_e9) AS BIGINT) AS nll_e9
        |  FROM terms GROUP BY 1),
-       |src AS (
+       |src AS MATERIALIZED (
        |  SELECT doc.source, COUNT(*) AS n_docs,
        |         CAST(SUM(p.n_bigrams) AS BIGINT) AS n_bigrams,
        |         CAST(SUM(p.nll_e9) AS BIGINT) AS nll_sum_e9

@@ -110,9 +110,10 @@ object AsOfJoin {
     * containing it (non-equi predicate `lo <= v < hi`). The band table
     * is broadcast, so the fact side never shuffles: a BroadcastNestedLoop
     * on a 4-row build side is O(|events| × 4) predicate evaluations —
-    * the right plan when the interval side is small; a large interval
+    * the right plan for this fixed 4-band literal. A large interval
     * side would want interval bucketing (equi-join on overlapping
-    * bucket keys + residual filter), same shape as the LSH candidates. */
+    * bucket keys + residual filter), same shape as the LSH candidates;
+    * no caller has one. */
   def eventsRangeJoin(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val bands = Seq(
@@ -135,51 +136,6 @@ object AsOfJoin {
        |FROM events JOIN bands ON value >= lo AND value < hi
        |GROUP BY 1
        |ORDER BY band""".stripMargin
-
-  /** Scale-path twin of [[eventsRangeJoin]]: BUCKETED interval join.
-    * Broadcast-NLJ is right when the interval side is tiny; once it is
-    * large, every probe row testing every interval is the quadratic
-    * cliff. The standard repair: pick a bucket width, EXPLODE each
-    * interval into the buckets it covers, give each probe row its one
-    * bucket, equi-join on the bucket (a plain shuffled hash join), and
-    * re-check the exact predicate as a residual filter — the same
-    * candidates-then-verify shape as the LSH chain. Unbounded interval
-    * ends (the 1e9 sentinel) are clamped to the probe domain's max
-    * in-plan (1-row bounds aggregate crossed back, the quality-gate
-    * shape) so the explode is bounded by domain/bucketWidth, not by
-    * the sentinel.
-    *
-    * Oracle: the SAME SQL as q_range_join — the twin must be
-    * indistinguishable from the broadcast form, which is what makes it
-    * a drop-in at scale. */
-  def eventsRangeJoinBucketed(spark: SparkSession, sfDir: String,
-      bucketWidth: Double = 10.0,
-      extraBands: Seq[(String, Double, Double)] = Nil): DataFrame = {
-    import spark.implicits._
-    val bands = (Seq(
-      ("low", 0.0, 25.0), ("mid", 25.0, 50.0),
-      ("high", 50.0, 75.0), ("top", 75.0, 1e9)) ++ extraBands)
-      .toDF("band", "lo", "hi")
-    val ev = Tables.events(spark, sfDir)
-      .select($"event_id", $"value",
-        floor($"value" / bucketWidth).cast("long").as("bucket"))
-    val bounds = ev.agg(max($"value").as("max_v"))
-    // drop bands entirely above the domain BEFORE the sequence: Spark's
-    // sequence(start, stop) auto-reverses when start > stop (it would
-    // emit a DESCENDING bucket list, not an empty one — for a far-away
-    // band that is the very blowup the clamp exists to prevent)
-    val bucketed = bands.crossJoin(bounds)
-      .filter($"lo" <= $"max_v")
-      .withColumn("bucket", explode(sequence(
-        floor($"lo" / bucketWidth).cast("long"),
-        floor(least($"hi", $"max_v") / bucketWidth).cast("long"))))
-      .select($"band", $"lo", $"hi", $"bucket")
-    ev.join(bucketed, Seq("bucket"))
-      .filter($"value" >= $"lo" && $"value" < $"hi") // exact residual
-      .groupBy($"band")
-      .agg(count(lit(1)).as("n_events"), Exact.avgExact($"value").as("avg_value"))
-      .orderBy($"band")
-  }
 
   /** The same as-of semantics through the CUSTOM PHYSICAL OPERATOR
     * ([[graft.plans.AsOfJoinExec]]) — oracle-gated against DuckDB's

@@ -138,9 +138,11 @@ object Behavioral {
     * Scale: the heavy step is the (type, user) aggregate — full
     * map-side partial combine, one shuffle. The window then partitions
     * by type over ALREADY-AGGREGATED rows (one row per (type, user)),
-    * so per-partition state is #users-per-type, not #events; with few
-    * huge groups, swap the window for an aggregate top-k monoid
-    * (fixed-size heap per group) — same contract, no per-group sort. */
+    * so per-partition state is #users-per-type, not #events. The
+    * `rank <= k` filter compiles to `WindowGroupLimit` (pinned by
+    * OptimizerEvidenceSpec): a partial limit keeps k rows per group in
+    * each input partition before the shuffle, so the final window sorts
+    * at most k × partitions rows per group, however huge the group. */
   def topKPerGroup(spark: SparkSession, sfDir: String, k: Int = 3): DataFrame =
     topKPerGroupFrom(Tables.events(spark, sfDir), k)
 
@@ -155,60 +157,6 @@ object Behavioral {
         col("total_value_dec").cast("double").as("total_value"))
       .orderBy(col("event_type"), col("rank"))
   }
-
-  /** The huge-group alternative promised above: a fixed-size top-k
-    * AGGREGATE (bounded sorted buffer, k entries per partial) instead
-    * of a per-group rank window. No per-group sort, no window state —
-    * partials of size k merge associatively, so the heavy (type, user)
-    * totals never need to be co-sorted, only co-grouped. Kept
-    * differentially tested against the window form (BehavioralSpec);
-    * at scale you pick this one when groups are few and enormous. */
-  private class TopKByValue(k: Int)
-      extends org.apache.spark.sql.expressions.Aggregator[
-        (String, Long, String), Seq[(Long, String)], Seq[(Long, String)]] {
-    // rank on the EXACT decimal (the window form's order) — a double
-    // cast before ranking could collapse distinct totals into a tie
-    // and swap top-k membership at the boundary. The total rides as
-    // its STRING rendering: a BigDecimal-typed buffer would pass
-    // through the encoder's default decimal(38,18) and silently null
-    // out totals beyond 20 integer digits that decimal(27,6) allows.
-    private def order(a: (Long, String), b: (Long, String)): Boolean = {
-      val cmp = BigDecimal(a._2).compare(BigDecimal(b._2))
-      cmp > 0 || (cmp == 0 && a._1 < b._1)
-    }
-    def zero: Seq[(Long, String)] = Seq.empty
-    def reduce(buf: Seq[(Long, String)], row: (String, Long, String)): Seq[(Long, String)] =
-      ((row._2, row._3) +: buf).sortWith(order).take(k)
-    def merge(a: Seq[(Long, String)], b: Seq[(Long, String)]): Seq[(Long, String)] =
-      (a ++ b).sortWith(order).take(k)
-    def finish(buf: Seq[(Long, String)]): Seq[(Long, String)] = buf
-    def bufferEncoder: org.apache.spark.sql.Encoder[Seq[(Long, String)]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[(Long, String)]]()
-    def outputEncoder: org.apache.spark.sql.Encoder[Seq[(Long, String)]] =
-      bufferEncoder
-  }
-
-  private[graft] def topKPerGroupHeapFrom(events: DataFrame, k: Int): DataFrame = {
-    import events.sparkSession.implicits._
-    val totals = events.groupBy(col("event_type"), col("user_id"))
-      .agg(sum(col("value").cast("decimal(27,6)")).cast("string").as("total_value_dec"))
-      .as[(String, Long, String)]
-    val agg = new TopKByValue(k)
-    totals.groupByKey(_._1)
-      .agg(agg.toColumn.name("top"))
-      .toDF("event_type", "top")
-      .select(col("event_type"), posexplode(col("top")).as(Seq("pos", "entry")))
-      .select(col("event_type"), (col("pos") + 1).cast("int").as("rank"),
-        col("entry._1").as("user_id"),
-        col("entry._2").cast("double").as("total_value"))
-      .orderBy(col("event_type"), col("rank"))
-  }
-
-  /** Gated entry for the heap aggregate — SAME oracle as
-    * q_topk_per_group, pinning drop-in equivalence of the two physical
-    * strategies (window sort vs bounded-buffer aggregate). */
-  def topKPerGroupHeap(spark: SparkSession, sfDir: String, k: Int = 3): DataFrame =
-    topKPerGroupHeapFrom(Tables.events(spark, sfDir), k)
 
   // ---- marketing attribution: first-touch / last-touch -------------
 

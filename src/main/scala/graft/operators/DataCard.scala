@@ -206,7 +206,11 @@ object DataCard {
   }
 
   /** The same composition in SQL: each component's published oracle as
-    * a derived table, melted with identical integer arithmetic. */
+    * a derived table, melted with identical integer arithmetic. Every
+    * section is MATERIALIZED: the melt reads each one once per metric,
+    * and DuckDB would otherwise re-inline the whole component oracle at
+    * each reference (it ran out of memory at 12.5 GiB at sf0.1 on a
+    * 15 GB 4-core box). */
   def dataCardSql(): String = {
     def m(cte: String, section: String, item: String,
         metrics: Seq[(String, String)]): String =
@@ -215,26 +219,26 @@ object DataCard {
            |       '$name' AS metric, CAST($expr AS BIGINT) AS value
            |FROM $cte""".stripMargin
       }.mkString("\nUNION ALL\n")
-    s"""WITH dc_mix AS (SELECT * FROM (${Profile.mixtureReportSql})),
-       |dc_funnel AS (SELECT * FROM (${Dedup.dedupFunnelSql()})),
-       |dc_contam AS (
+    s"""WITH dc_mix AS MATERIALIZED (SELECT * FROM (${Profile.mixtureReportSql})),
+       |dc_funnel AS MATERIALIZED (SELECT * FROM (${Dedup.dedupFunnelSql()})),
+       |dc_contam AS MATERIALIZED (
        |  SELECT CAST(COUNT(*) AS BIGINT) AS n_docs_flagged,
        |         COALESCE(CAST(SUM(n_contaminated) AS BIGINT), 0)
        |           AS n_contaminated_grams,
        |         COALESCE(MAX(CAST(n_contaminated AS BIGINT) * 1000000
        |                      // n_grams), 0) AS max_ratio_x1e6
        |  FROM (${Decontaminate.contaminationSql()})),
-       |dc_conf AS (
+       |dc_conf AS MATERIALIZED (
        |  SELECT lang_labeled,
        |         MAX(n_labeled) AS n_labeled,
        |         COALESCE(CAST(SUM(CASE WHEN lang_pred = lang_labeled
        |                                THEN n END) AS BIGINT), 0) AS n_correct
        |  FROM (${TextAnalysis.langIdConfusionSql})
        |  GROUP BY 1),
-       |dc_kl AS (SELECT * FROM (${Divergence.sliceDivergenceSql})),
-       |dc_ks AS (SELECT * FROM (${Divergence.ksTestSql})),
-       |dc_zipf AS (SELECT * FROM (${TextAnalysis.zipfSlopeSql()})),
-       |dc_pii AS (
+       |dc_kl AS MATERIALIZED (SELECT * FROM (${Divergence.sliceDivergenceSql})),
+       |dc_ks AS MATERIALIZED (SELECT * FROM (${Divergence.ksTestSql})),
+       |dc_zipf AS MATERIALIZED (SELECT * FROM (${TextAnalysis.zipfSlopeSql()})),
+       |dc_pii AS MATERIALIZED (
        |  SELECT CAST(SUM(CASE WHEN has_pii THEN 1 ELSE 0 END) AS BIGINT)
        |           AS n_docs_flagged,
        |         CAST(SUM(n_email) AS BIGINT) AS n_email,
@@ -243,15 +247,15 @@ object DataCard {
        |         CAST(SUM(n_phone) AS BIGINT) AS n_phone,
        |         CAST(SUM(n_ipv4) AS BIGINT) AS n_ipv4
        |  FROM (${Pii.piiScanSql})),
-       |dc_fuzzy AS (
+       |dc_fuzzy AS MATERIALIZED (
        |  SELECT CAST(COUNT(*) AS BIGINT) AS n_docs_flagged,
        |         COALESCE(CAST(SUM(n_bench_matches) AS BIGINT), 0)
        |           AS n_bench_matches,
        |         COALESCE(CAST(FLOOR(MAX(max_jaccard) * 1e6) AS BIGINT), 0)
        |           AS max_jaccard_e6
        |  FROM (${Decontaminate.fuzzyContaminationSql()})),
-       |dc_cal AS (SELECT * FROM (${QualityModel.calibrationSql()})),
-       |dc_auc AS (SELECT * FROM (${QualityModel.rocAucSql()}))
+       |dc_cal AS MATERIALIZED (SELECT * FROM (${QualityModel.calibrationSql()})),
+       |dc_auc AS MATERIALIZED (SELECT * FROM (${QualityModel.rocAucSql()}))
        |${m("dc_mix", "mixture", "axis", Seq(
             "n_rows" -> "n_rows", "n_cells" -> "n_cells",
             "entropy_e9" -> "entropy_e9", "simpson_e9" -> "simpson_e9"))}

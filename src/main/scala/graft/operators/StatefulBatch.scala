@@ -17,20 +17,9 @@ case class BalanceOut(user_id: Long, event_id: Long, balance: Double)
   * prepaid credit, rate-limiter tokens) is the canonical aggregation a
   * window CANNOT express: the clamp makes each step depend on the
   * previous step's POST-CLAMP value, so there is no prefix-decomposable
-  * form — it is a sequential fold per entity. The distributed shape is
-  * `groupByKey(entity).flatMapGroups`: one keyed shuffle co-locates
-  * each entity's history, the fold runs as plain Scala inside the
-  * executor (the batch analog of the streaming
-  * `mapGroupsWithState` used in [[graft.streaming.EventsStream]]), and
-  * nothing touches the driver.
-  *
-  * Scale: cost is one shuffle on the entity key; the in-memory sort
-  * bounds the operator to per-entity histories that fit an executor
-  * core's heap — the standard sessionization assumption. For
-  * pathological entities, pre-bucket by (entity, coarse time) and
-  * carry the boundary balance forward, or fall back to
-  * `repartitionAndSortWithinPartitions` secondary sort so the group
-  * streams instead of materializing.
+  * form — it is a sequential fold per entity (the batch analog of the
+  * streaming `transformWithState` fold in [[graft.streaming.TwsOps]]),
+  * and no row leaves the executors.
   *
   * The update rule is pinned-order IEEE arithmetic
   * (((bal + value) − drift), then greatest, then least), so the DuckDB
@@ -39,36 +28,13 @@ case class BalanceOut(user_id: Long, event_id: Long, balance: Double)
   */
 object StatefulBatch {
 
+  /** Secondary sort, not per-group materialization: one hash
+    * repartition on the entity key, an in-partition sort on (entity,
+    * time, id) — Spark's sort is external, it spills — then a single
+    * streaming pass whose fold state resets at each entity boundary.
+    * Memory per task is O(1) in the entity's history length, so a
+    * pathological entity costs disk, not heap. */
   def clampedBalance(spark: SparkSession, sfDir: String,
-      floorAt: Double = 0.0, cap: Double = 500.0,
-      drift: Double = 50.0): DataFrame = {
-    import spark.implicits._
-    val ds = Tables.events(spark, sfDir)
-      .select($"user_id", $"event_id", unix_micros($"ts").as("ts_micros"), $"value")
-      .as[BalanceRow]
-    ds.groupByKey(_.user_id)
-      .flatMapGroups { (uid: Long, it: Iterator[BalanceRow]) =>
-        val rows = it.toArray.sortBy(r => (r.ts_micros, r.event_id))
-        var bal = 0.0
-        rows.iterator.map { r =>
-          bal = math.min(math.max(bal + r.value - drift, floorAt), cap)
-          BalanceOut(uid, r.event_id, bal)
-        }
-      }
-      .toDF()
-      .orderBy($"user_id", $"event_id")
-  }
-
-  /** The huge-entity scale path promised above, made real: secondary
-    * sort instead of per-group materialization. One hash repartition on
-    * the entity key, an in-partition sort on (entity, time, id) —
-    * Spark's sort is external, it spills — then a single streaming pass
-    * whose fold state resets at each entity boundary. Memory per task
-    * is O(1) in the entity's history length, so a pathological entity
-    * costs disk, not heap. Gated with the SAME oracle as the
-    * flatMapGroups form — drop-in equivalence of the two physical
-    * strategies. */
-  def clampedBalanceSorted(spark: SparkSession, sfDir: String,
       floorAt: Double = 0.0, cap: Double = 500.0,
       drift: Double = 50.0): DataFrame = {
     import spark.implicits._

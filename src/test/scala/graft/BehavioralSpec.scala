@@ -93,6 +93,17 @@ class BehavioralSpec extends SparkSuite {
       ("b", 1, 20L, 3.0)))
   }
 
+  test("top-k per group: keeps tie order and handles groups smaller than k") {
+    val events = ev(
+      (1L, 10L, "a", "2024-01-01 00:00:00", 5.0),
+      (2L, 11L, "a", "2024-01-01 00:00:01", 5.0),
+      (3L, 20L, "b", "2024-01-01 00:00:02", 1.0)
+    )
+    val out = Behavioral.topKPerGroupFrom(events, 5).collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+    assert(out.toSeq == Seq(("a", 1, 10L, 5.0), ("a", 2, 11L, 5.0), ("b", 1, 20L, 1.0)))
+  }
+
   test("top-k per group on testdata: ranks within k, groups complete") {
     val out = Behavioral.topKPerGroup(spark, sf).cache()
     val types = out.select($"event_type").distinct().count()
@@ -121,34 +132,6 @@ class StreamEnrichSpec extends SparkSuite {
     // every event type got a category — the dim covers the domain
     assert(streamed.filter($"category".isNull).count() == 0)
     streamed.unpersist()
-  }
-}
-
-/** Heap-aggregate top-k twin == window top-k (round 3). */
-class TopKHeapSpec extends SparkSuite {
-  import spark.implicits._
-
-  private def cmp(df: org.apache.spark.sql.DataFrame) = df.collect()
-    .map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
-
-  test("heap aggregate equals the window form on testdata, k=3 and k=10") {
-    val events = graft.sources.Tables.events(spark, sf)
-    for (k <- Seq(3, 10)) {
-      val w = cmp(Behavioral.topKPerGroupFrom(events, k))
-      val h = cmp(Behavioral.topKPerGroupHeapFrom(events, k))
-      assert(w == h, s"k=$k")
-    }
-  }
-
-  test("heap aggregate keeps tie order and handles groups smaller than k") {
-    val events = Seq(
-      (1L, 10L, "a", "2024-01-01 00:00:00", 5.0),
-      (2L, 11L, "a", "2024-01-01 00:00:01", 5.0),
-      (3L, 20L, "b", "2024-01-01 00:00:02", 1.0)
-    ).toDF("event_id", "user_id", "event_type", "ts_s", "value")
-      .withColumn("ts", to_timestamp($"ts_s")).drop("ts_s")
-    val h = cmp(Behavioral.topKPerGroupHeapFrom(events, 5))
-    assert(h == Seq(("a", 1, 10L, 5.0), ("a", 2, 11L, 5.0), ("b", 1, 20L, 1.0)))
   }
 }
 

@@ -11,8 +11,7 @@ class OptimizerEvidenceSpec extends SparkSuite {
 
   test("rank<=k filter compiles to WindowGroupLimit (no full per-group sort spill)") {
     // Spark 3.5+ rewrites rank-filter windows to a bounded group-limit
-    // operator — the optimizer-native form of the heap aggregate
-    // (Behavioral.topKPerGroupHeap exists for when this CAN'T fire).
+    // operator — the optimizer-native form of a per-group top-k heap.
     val plan = Behavioral.topKPerGroup(spark, sf).queryExecution.executedPlan.toString
     assert(plan.contains("WindowGroupLimit"), plan.take(800))
   }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Analytics, AsOfJoin}
+import graft.operators.Analytics
 import graft.sources.Tables
 
 /** KMV quantile sketch: exact mergeability + sampling-error envelope. */
@@ -94,47 +94,5 @@ class SketchStreamSpec extends SparkSuite {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
       ()
     }
-  }
-}
-
-/** Bucketed interval join: drop-in equivalence with the broadcast-NLJ
-  * form and the no-NLJ plan shape. */
-class BucketedRangeJoinSpec extends SparkSuite {
-
-  test("bucketed twin returns exactly the broadcast form's result") {
-    val a = AsOfJoin.eventsRangeJoin(spark, sf).collect().toSeq
-    val b = AsOfJoin.eventsRangeJoinBucketed(spark, sf).collect().toSeq
-    assert(a == b)
-    // and under a different bucket width (bucketing must be invisible)
-    val c = AsOfJoin.eventsRangeJoinBucketed(spark, sf, bucketWidth = 7.0)
-      .collect().toSeq
-    assert(a == c)
-  }
-
-  test("band entirely above the domain matches nothing and cannot blow up") {
-    // a (1e6, 1e9) band against a 0-100 value domain: without the
-    // lo <= max_v guard, sequence(1e5, 10) auto-REVERSES into a
-    // 100k-element descending bucket list per band row
-    val withFar = AsOfJoin.eventsRangeJoinBucketed(spark, sf,
-        extraBands = Seq(("far", 1e6, 1e9)))
-      .collect().toSeq
-    val base = AsOfJoin.eventsRangeJoinBucketed(spark, sf).collect().toSeq
-    assert(withFar == base, "the unmatched far band must be invisible")
-  }
-
-  test("bucketed plan joins hash-on-bucket, no nested-loop scan of intervals") {
-    val df = AsOfJoin.eventsRangeJoinBucketed(spark, sf)
-    df.collect()
-    // AQE toString prints Final AND Initial sections — count nodes in
-    // the final plan only
-    val plan = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==").head
-    // the events⨝intervals join must be an equi join on the bucket key;
-    // the only nested-loop allowed is the 1-row domain-bounds cross
-    // (4 bands × 1 bounds row), which never touches the events table
-    assert(plan.contains("HashJoin") || plan.contains("SortMergeJoin"), plan.take(1200))
-    val nlj = plan.split("BroadcastNestedLoopJoin").length - 1
-    assert(nlj <= 1, s"expected at most the bands×bounds cross, got $nlj\n${plan.take(1200)}")
-    assert(plan.contains("bucket"), plan.take(1200))
   }
 }
